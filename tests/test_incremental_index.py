@@ -3,6 +3,7 @@ append sequences, including splits triggered by the increment."""
 
 from __future__ import annotations
 
+import random
 import shutil
 import tempfile
 
@@ -153,3 +154,79 @@ def test_overflow_window_scan_pushes_literal_zvalue_filter(spark, tmp_table):
     pushed = " ".join(P.pushed_filters(q))
     assert "zvalue" in pushed, pushed
     assert P.broadcast_join_count(q) >= 1
+
+
+def _seed(spark, path, n=4000, seed=11):
+    rng = random.Random(seed)
+    rows = [(i, rng.randint(0, 500), rng.randint(0, 500)) for i in range(n)]
+    W.table_create(spark, path)
+    W.insert_append(spark, path, spark.createDataFrame(rows, "id long, x int, y int"))
+    return rows
+
+
+def _jobs_of(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_incremental_refresh_job_ceiling(spark, tmp_table):
+    """The cost class in Spark jobs: one index read, one batch collect,
+    one window re-read (its broadcast included) and one index write for
+    an overflowing batch; no table read at all without overflow."""
+    path = f"{tmp_table}/t"
+    rows = _seed(spark, path)
+    over = spark.createDataFrame(
+        [(10_000 + i, x, y) for i, (_, x, y) in enumerate(rows[:300])],
+        "id long, x int, y int",
+    )
+    W._append_batch(path, over)
+    stats, jobs = _jobs_of(
+        spark, "refresh-over", lambda: W.refresh_index_incremental(spark, path, over)
+    )
+    assert stats["overflowed"] > 0 and stats["table_scanned"]
+    assert jobs <= 6, jobs
+
+    calm = spark.createDataFrame([(20_000, 4000, 4000)], "id long, x int, y int")
+    W._append_batch(path, calm)
+    stats, jobs = _jobs_of(
+        spark, "refresh-calm", lambda: W.refresh_index_incremental(spark, path, calm)
+    )
+    assert stats == {"overflowed": 0, "table_scanned": False}
+    assert jobs <= 3, jobs
+    assert _index_set(spark, path) == _full_set(spark, path)
+
+
+def test_incremental_refresh_wide_overflow_equals_full_rebuild(spark, tmp_table):
+    """More windows overflow at once than the literal scan filter has
+    disjuncts (``_MAX_SCAN_RANGES``), so neighbours share coarsened
+    ranges and the equi-join alone assigns rows to windows. The batch
+    re-appends existing points (duplicate cells) and piles one cell past
+    the threshold so the rebuild splits to pl 64; a second batch bumps
+    that pl-64 leaf again without reopening it."""
+    path = f"{tmp_table}/t"
+    rows = _seed(spark, path)
+    dup = [(10_000 + i, x, y) for i, (_, x, y) in enumerate(rows) if i % 2 == 0]
+    pile = [(30_000 + i, 250, 250) for i in range(25)]
+    batch = spark.createDataFrame(dup + pile, "id long, x int, y int")
+    W._append_batch(path, batch)
+    stats = W.refresh_index_incremental(spark, path, batch)
+    assert stats["overflowed"] > W._MAX_SCAN_RANGES, stats
+    got = _index_set(spark, path)
+    assert got == _full_set(spark, path)
+    assert any(pl == IX.MAX_DEPTH and s > IX.DEFAULT_THRESHOLD for _, pl, s in got)
+
+    more = spark.createDataFrame(
+        [(40_000 + i, 250, 250) for i in range(5)], "id long, x int, y int"
+    )
+    W._append_batch(path, more)
+    W.refresh_index_incremental(spark, path, more)
+    assert _index_set(spark, path) == _full_set(spark, path)
+    total = spark.read.parquet(f"{path}/index").agg(F.sum("size")).collect()[0][0]
+    assert total == len(rows) + len(dup) + len(pile) + 5

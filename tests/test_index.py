@@ -4,6 +4,9 @@ lookup semantics, and rendering."""
 
 from __future__ import annotations
 
+import random
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -227,3 +230,99 @@ def test_index_build_np_equals_py_oracle():
             z, c, threshold=th, max_depth=md, root_pl=rpl
         )
         assert got == want
+
+
+def test_index_build_np_multi_root_equals_py_per_root():
+    """Several disjoint roots in ONE kernel call give exactly the sorted
+    union of the pure-Python recursion run root by root over each
+    window's cells — empty windows, duplicate keys and mixed root depths
+    included; cells outside every window are ignored."""
+    rng = random.Random(20261017)
+    for _ in range(40):
+        roots: dict[int, int] = {}
+        for _ in range(rng.randint(1, 12)):
+            pl = rng.choice([6, 10, 20])
+            bz = rng.getrandbits(pl - 2) << (64 - pl)
+            # keep the roots disjoint: no root may contain another
+            if all(
+                (bz ^ z) >> (64 - min(pl, p)) != 0 for z, p in roots.items()
+            ):
+                roots[bz] = pl
+        cells = [
+            (bz | rng.getrandbits(64 - pl), rng.randint(1, 3))
+            for bz, pl in roots.items()
+            for _ in range(rng.choice([0, 1, 4, 60]))
+        ]
+        cells += [cells[0]] * 15 if cells else []
+        stray = [(-1, 7), (1 << 62, 3)]  # outside [00*], so in no window
+        th = rng.choice([1, 3, 10])
+        want = sorted(
+            leaf
+            for bz, pl in roots.items()
+            for leaf in IX.index_build_py(
+                [c for c in cells if (c[0] ^ bz) >> (64 - pl) == 0],
+                threshold=th,
+                root_z=bz,
+                root_pl=pl,
+            )
+        )
+        allc = cells + stray
+        got = IX.index_build_np(
+            np.array([c[0] for c in allc], dtype=np.int64),
+            np.array([c[1] for c in allc], dtype=np.int64),
+            threshold=th,
+            root_z=np.array(list(roots), dtype=np.int64),
+            root_pl=np.array(list(roots.values()), dtype=np.int64),
+        )
+        assert got == want
+
+
+def test_index_build_tail_batches_match_py_oracle(spark):
+    """A tiny coarse cap forces almost every point into the tail phase,
+    where each Arrow batch solves all of its tails in one multi-root
+    kernel call; the result must still be the exact recursion."""
+    rng = random.Random(7)
+    rows = [(i, rng.randint(0, 300), rng.randint(0, 300)) for i in range(3000)]
+    rows += [(5000 + i, 42, 42) for i in range(30)]  # pl-64 pile-up
+    pts = spark.createDataFrame(rows, "id long, x int, y int")
+    got = sorted(
+        (r.bucket_z, r.pl, r.size)
+        for r in IX.index_build(pts, max_coarse_log=2).collect()
+    )
+    want = IX.index_build_py([(r.z, r.c) for r in IX.cells(pts).collect()])
+    assert got == want
+
+
+def test_floor_lookup_np_matches_floor_lookup_batch(spark, built):
+    """Driver routing (sorted floor lookup) agrees with the distributed
+    prefix equi-join on seeded random probes, and a probe outside the
+    cover raises instead of wrapping to the last bucket or flooring onto
+    an unrelated one."""
+    _, idx, _ = built
+    pdf = idx.toPandas().sort_values("bucket_z", ignore_index=True)
+    bz, pl = pdf["bucket_z"].to_numpy(), pdf["pl"].to_numpy()
+
+    rng = np.random.default_rng(20261017)
+    zmax = int(bz.max()) + (1 << (64 - int(pl[bz.argmax()])))
+    probes = np.concatenate(
+        (
+            rng.integers(0, 1 << 24, 400),  # the populated corner
+            rng.integers(0, zmax, 100),  # the whole cover
+            bz[rng.integers(0, bz.size, 50)],  # exact bucket keys
+        )
+    )
+    pos = IX.floor_lookup_np(bz, pl, probes)
+    got = sorted(zip(probes.tolist(), bz[pos].tolist()))
+    want = sorted(
+        (r.z, r.bucket_z)
+        for r in IX.floor_lookup_batch(
+            idx, spark.createDataFrame([(int(z),) for z in probes], "z long")
+        ).collect()
+    )
+    assert got == want
+
+    with pytest.raises(ValueError, match="outside the index cover"):
+        IX.floor_lookup_np(bz, pl, np.array([zmax]))  # past the cover
+    with pytest.raises(ValueError, match="outside the index cover"):
+        # a partial cover: z below its first key must not wrap around
+        IX.floor_lookup_np(bz[1:], pl[1:], np.array([bz[0]]))

@@ -38,6 +38,7 @@ __all__ = [
     "split_step",
     "floor_lookup",
     "floor_lookup_batch",
+    "floor_lookup_np",
 ]
 
 
@@ -92,8 +93,9 @@ def index_build(
        above/at ``cd`` is built driver-side with the exact recursion;
        coarse nodes still over threshold become **tails**.
     2. **Fine** — every tail is a closed subproblem (its sub-trie depends
-       only on its own cells). Tail rows are grouped and each tail solved
-       independently by the same recursion inside ``applyInPandas`` —
+       only on its own cells). Tail rows are hashed into batches and
+       every tail of a batch is an open root of ONE multi-root
+       :func:`index_build_np` call inside ``applyInPandas`` —
        Arrow-batched, embarrassingly parallel, shuffling only the tails'
        (tail_key, z) rows. With the adaptive ``cd`` this phase usually
        sees a sliver of the data (55 of 600 K rows on the sf0.1 fixture).
@@ -101,7 +103,7 @@ def index_build(
     Scale notes: at 100 TB the collect cap binds (cd = anchor +
     ``max_coarse_log`` - ROOT_PL) and tails grow with data/2^cap instead
     of staying sub-threshold — they still parallelize across executors by
-    key, and the per-tail Python kernel is acceptable there: index
+    key, and the per-batch numpy kernel is acceptable there: index
     construction is partitioner metadata (à la Sedona's quadtree build),
     not the per-row query path. No per-cell pre-aggregation pass: at
     realistic densities the distinct-z table is nearly as large as the
@@ -176,29 +178,24 @@ def index_build(
 
     # one Arrow group per TAIL would pay per-group overhead 2^14 times on
     # fine-grained coarse depths; hash the tails into ~4x-parallelism
-    # batches instead and solve every tail inside its batch — group count
-    # (and so Arrow/worker overhead) is fixed regardless of tail count,
-    # while the hash keeps batches load-balanced
+    # batches instead and solve a batch's tails in one kernel call — group
+    # count (and so Arrow/worker overhead) is fixed regardless of tail
+    # count, while the hash keeps batches load-balanced
     n_batches = max(1, min(4 * para, len(tails)))
 
     def _build_batch(pdf):
         import numpy as np
         import pandas as pd
 
-        out: list[tuple[int, int, int]] = []
-        for tb, g in pdf.groupby("tb"):
-            zarr = g["z"].to_numpy()
-            out.extend(
-                index_build_np(
-                    zarr,
-                    np.ones(len(zarr), dtype=np.int64),
-                    threshold=threshold,
-                    max_depth=max_depth,
-                    root_z=int(tb),
-                    root_pl=cd,
-                )
-            )
-        return pd.DataFrame(out, columns=["bucket_z", "pl", "size"])
+        leaves = index_build_np(
+            pdf["z"],
+            np.ones(len(pdf), dtype=np.int64),
+            threshold=threshold,
+            max_depth=max_depth,
+            root_z=pdf["tb"].unique(),
+            root_pl=cd,
+        )
+        return pd.DataFrame(leaves, columns=["bucket_z", "pl", "size"])
 
     sub_df = tail_rows.withColumn(
         "batch", F.pmod(F.xxhash64("tb"), F.lit(n_batches))
@@ -255,18 +252,26 @@ def index_build_np(
     c,
     threshold: int = DEFAULT_THRESHOLD,
     max_depth: int = MAX_DEPTH,
-    root_z: int = 0,
-    root_pl: int = ROOT_PL,
+    root_z=0,
+    root_pl=ROOT_PL,
 ) -> list[tuple[int, int, int]]:
     """Vectorized twin of :func:`index_build_py` — identical output
     (tests pin equality on random inputs), numpy throughput. The
     pure-Python form stays as the independent oracle; this one is what
-    the driver-side coarse phase and the per-tail Arrow kernel call:
-    at a few hundred thousand coarse cells the tuple sort + prefix-sum
-    + bisect loop in CPython cost seconds, while the same work here is
-    one int64 argsort + cumsum + a LEVEL-SYNCHRONOUS split loop (one
-    ``searchsorted`` over every still-open node per depth level, ≤
-    ``max_depth`` iterations of O(open nodes) each).
+    the driver-side coarse phase, the tail-batch Arrow kernel and the
+    incremental refresh call: at a few hundred thousand coarse cells the
+    tuple sort + prefix-sum + bisect loop in CPython cost seconds, while
+    the same work here is one int64 argsort + cumsum + a
+    LEVEL-SYNCHRONOUS split loop (one ``searchsorted`` over every
+    still-open node per depth level, ≤ ``max_depth`` iterations of
+    O(open nodes) each).
+
+    ``root_z``/``root_pl`` may be scalars or equal-length arrays (a
+    scalar pl broadcasts): every root is an independent open node whose
+    initial ``[lo, hi)`` is the ``searchsorted`` span of its z-window, so
+    many disjoint sub-tries are solved in ONE pass — the output equals
+    the sorted union of :func:`index_build_py` run root by root over
+    each window's cells. Cells outside every root's window are ignored.
 
     The global (un-bounded) searchsorted is exact for the same reason
     the oracle's bounded bisect is: nodes are prefix-defined contiguous
@@ -275,34 +280,30 @@ def index_build_np(
     lands within [lo, hi].
 
     ``z``/``c`` are array-likes (numpy arrays, pandas columns, or
-    sequences) of cell keys and counts."""
+    sequences) of cell keys and counts; duplicate keys add up."""
     import numpy as np
 
     z = np.asarray(z, dtype=np.int64)
     c = np.asarray(c, dtype=np.int64)
-    if z.size == 0:
-        return [(root_z, root_pl, 0)]
+    bz, pl = (
+        a.astype(np.int64)
+        for a in np.broadcast_arrays(np.atleast_1d(root_z), np.atleast_1d(root_pl))
+    )
     order = np.argsort(z, kind="stable")
     zs = z[order]
     acc = np.concatenate(([0], np.cumsum(c[order])))
+    # window of prefix (bz, pl) = [bz, bz | low (64 - pl) bits]
+    lo = np.searchsorted(zs, bz, side="left").astype(np.int64)
+    hi = np.searchsorted(
+        zs, bz | ~(np.int64(-1) << (np.int64(64) - pl)), side="right"
+    ).astype(np.int64)
 
-    out_z: list = []
-    out_pl: list = []
-    out_sz: list = []
-    lo = np.array([0], dtype=np.int64)
-    hi = np.array([zs.size], dtype=np.int64)
-    bz = np.array([root_z], dtype=np.int64)
-    pl = np.array([root_pl], dtype=np.int64)
+    out: list = []
     while lo.size:
         size = acc[hi] - acc[lo]
         leaf = (size <= threshold) | (pl >= max_depth)
-        if leaf.any():
-            out_z.append(bz[leaf])
-            out_pl.append(pl[leaf])
-            out_sz.append(size[leaf])
+        out.append(np.stack((bz[leaf], pl[leaf], size[leaf]), axis=1))
         split = ~leaf
-        if not split.any():
-            break
         slo, shi, sbz, spl = lo[split], hi[split], bz[split], pl[split]
         rk = sbz | (np.int64(1) << (np.int64(63) - spl))
         mid = np.searchsorted(zs, rk, side="left").astype(np.int64)
@@ -310,16 +311,35 @@ def index_build_np(
         hi = np.concatenate((mid, shi))
         bz = np.concatenate((sbz, rk))
         pl = np.concatenate((spl + 1, spl + 1))
-    rows = np.stack(
-        (
-            np.concatenate(out_z),
-            np.concatenate(out_pl),
-            np.concatenate(out_sz),
-        ),
-        axis=1,
-    )
+    rows = np.concatenate(out)
     rows = rows[np.lexsort((rows[:, 2], rows[:, 1], rows[:, 0]))]
     return list(map(tuple, rows.tolist()))
+
+
+def floor_lookup_np(bucket_z, pl, z):
+    """Driver-side batched ``getRowOrBefore`` (``Index.java:115-122``):
+    for each z the position of its owning bucket in ``bucket_z`` (sorted
+    ascending, with ``pl`` aligned) — one ``searchsorted`` floor lookup,
+    which on a prefix-free cover is exactly the owner.
+
+    A probe outside the cover raises: ``searchsorted - 1`` would wrap a
+    z below the first key to the LAST bucket, and a z past a bucket's
+    window would floor onto an unrelated bucket — both silent
+    miscounts, where :func:`floor_lookup_batch` drops the probe."""
+    import numpy as np
+
+    bucket_z = np.asarray(bucket_z, dtype=np.int64)
+    pl = np.asarray(pl, dtype=np.int64)
+    z = np.asarray(z, dtype=np.int64)
+    pos = np.searchsorted(bucket_z, z, side="right") - 1
+    at = np.maximum(pos, 0)
+    own = (pos >= 0) & (
+        (z ^ bucket_z[at]).view(np.uint64) >> (64 - pl[at]).astype(np.uint64) == 0
+    )
+    if not own.all():
+        bad = z[~own][:5].tolist()
+        raise ValueError(f"z-values outside the index cover: {bad}")
+    return pos
 
 
 def split_step(points: DataFrame, parent_pl: int = 8) -> DataFrame:

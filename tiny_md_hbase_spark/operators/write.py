@@ -5,9 +5,11 @@ the bucket, ``Put``, atomically bump the bucket counter, maybe split
 (``Client.insert``, ``Client.java:55-59``; 4+ RPCs per point). The Spark
 shape is the batch/micro-batch append: z-encode the whole batch with
 native expressions, append to the z-clustered table, then refresh the
-index by aggregation — exact counts (the reference's counters drift on
-overwrites, SURVEY.md §1.3), one shuffle per batch instead of per-point
-RPCs. The streaming wrapper lives in ``streaming/ingest.py``.
+index from scratch, or incrementally on the driver: route the batch with
+a sorted floor lookup, bump exact counts (the reference's counters drift
+on overwrites, SURVEY.md §1.3) and rebuild only overflowing buckets — a
+few Spark jobs per batch instead of per-point RPCs. The streaming
+wrapper lives in ``streaming/ingest.py``.
 """
 
 from __future__ import annotations
@@ -20,12 +22,12 @@ from pyspark.sql import functions as F
 from tiny_md_hbase_spark.operators.index import (
     DEFAULT_THRESHOLD,
     MAX_DEPTH,
-    cells,
-    floor_lookup_batch,
+    floor_lookup_np,
     index_build,
-    index_build_py,
+    index_build_np,
 )
 from tiny_md_hbase_spark.sources.writer import with_zvalue
+from tiny_md_hbase_spark.zorder import make_mask
 
 __all__ = [
     "table_create",
@@ -38,6 +40,7 @@ __all__ = [
 ]
 
 _POINTS_SCHEMA = "id long, x int, y int"
+_INDEX_SCHEMA = "bucket_z long, pl int, size long"
 
 # cap on the literal zvalue-range disjuncts pushed into the overflow
 # re-read scan; see _overflow_window_cells
@@ -129,15 +132,22 @@ def refresh_index_incremental(
     """Update the index for an appended batch touching only affected
     buckets — O(batch + overflowing-bucket windows), not O(table).
 
-    1. Route the batch's cells to their owning buckets (broadcast as-of
-       join against the current index — the reference's per-point
-       ``getRowOrBefore`` amortized to one join, ``Index.java:175-181``).
-    2. Bump sizes. Buckets still within threshold are done — their entry
-       is exact without reading the table.
-    3. Each overflowing bucket is a closed subproblem (same property the
-       two-phase builder exploits): re-read ONLY its z-window from the
-       (z-clustered, stats-pruned) table and rebuild its subtree with the
-       exact split recursion.
+    The index is partitioner metadata, so this runs on the driver, the
+    reference's per-point insert path (``Index.java:115-122``,
+    ``175-230``) amortized to one micro-batch:
+
+    1. Read the index into pandas, collect the batch's z-values once,
+       route them with a sorted floor lookup (:func:`floor_lookup_np` —
+       ``getRowOrBefore`` on a prefix-free cover) and add the counts.
+       Buckets still within threshold are done — their entry is exact
+       without reading the table.
+    2. Each overflowing bucket is a closed subproblem (same property the
+       two-phase builder exploits): collect ONLY the overflowing
+       z-windows' rows from the (z-clustered, stats-pruned) table and
+       rebuild all their subtrees in ONE multi-root
+       :func:`index_build_np` call.
+    3. Write the new index from the driver frame — a local relation, not
+       a read of the parquet it replaces, so it needs no checkpoint.
 
     Equivalent to a full rebuild by construction: splitting is local to a
     bucket, and non-overflowing buckets are untouched by definition.
@@ -147,59 +157,44 @@ def refresh_index_incremental(
     "table_scanned": bool}`` — a batch that overflows nothing must never
     read the points table at all.
     """
-    index = spark.read.parquet(f"{path}/index")
-    # route batch cells to owning buckets, then aggregate added counts
-    batch_cells = cells(batch)
-    routed = floor_lookup_batch(index, batch_cells.select("z"))
-    delta = (
-        routed.join(batch_cells, "z")
-        .groupBy("bucket_z")
-        .agg(F.sum("c").alias("added"))
+    import numpy as np
+    import pandas as pd
+
+    index = (
+        spark.read.schema(_INDEX_SCHEMA)
+        .parquet(f"{path}/index")
+        .toPandas()
+        .sort_values("bucket_z", ignore_index=True)
     )
+    z = with_zvalue(batch).select("zvalue").toPandas()["zvalue"]
+    owner = floor_lookup_np(index["bucket_z"], index["pl"], z)
+    index["size"] += np.bincount(owner, minlength=len(index))
 
-    merged = (
-        index.join(delta, "bucket_z", "left")
-        .select(
-            "bucket_z",
-            "pl",
-            (F.col("size") + F.coalesce("added", F.lit(0))).alias("size"),
-        )
-    )
-    over = merged.filter((F.col("size") > threshold) & (F.col("pl") < MAX_DEPTH))
-    keep = merged.filter(~((F.col("size") > threshold) & (F.col("pl") < MAX_DEPTH)))
-
-    over_rows = over.collect()  # overflowing buckets only — small by nature
-    if not over_rows:
-        _atomic_write_index(spark, keep, path)
-        return {"overflowed": 0, "table_scanned": False}
-
-    pts = spark.read.parquet(f"{path}/points")
-    affected_cells = _overflow_window_cells(pts, over_rows)
-
-    def _rebuild(pdf):
-        import pandas as pd
-
-        wb = int(pdf["wb"].iloc[0])
-        wpl = int(pdf["wpl"].iloc[0])
-        sub = index_build_py(
-            list(zip((int(z) for z in pdf["zvalue"]), (int(c) for c in pdf["c"]))),
+    over = (index["size"] > threshold) & (index["pl"] < MAX_DEPTH)
+    if over.any():
+        windows = index[over]
+        # declared schemas (index above, points here) skip footer inference
+        pts = spark.read.schema("zvalue long").parquet(f"{path}/points")
+        win = _overflow_window_cells(pts, list(windows.itertuples())).toPandas()
+        rebuilt = index_build_np(
+            win["zvalue"],
+            np.ones(len(win), dtype=np.int64),
             threshold=threshold,
-            max_depth=MAX_DEPTH,
-            root_z=wb,
-            root_pl=wpl,
+            root_z=windows["bucket_z"],
+            root_pl=windows["pl"],
         )
-        return pd.DataFrame(sub, columns=["bucket_z", "pl", "size"])
-
-    rebuilt = affected_cells.groupBy("wb", "wpl").applyInPandas(
-        _rebuild, "bucket_z long, pl int, size long"
+        rebuilt = pd.DataFrame(rebuilt, columns=index.columns)
+        index = pd.concat([index[~over], rebuilt])
+    spark.createDataFrame(index, _INDEX_SCHEMA).write.mode("overwrite").parquet(
+        f"{path}/index"
     )
-    _atomic_write_index(spark, keep.unionByName(rebuilt), path)
-    return {"overflowed": len(over_rows), "table_scanned": True}
+    return {"overflowed": int(over.sum()), "table_scanned": bool(over.any())}
 
 
 def _overflow_window_cells(pts: DataFrame, over_rows: list) -> DataFrame:
-    """Cells of the overflowing buckets' z-windows, tagged with their
-    window (wb, wpl).
+    """The stored rows ``(wb, wpl, zvalue)`` of the overflowing buckets'
+    z-windows, each tagged with its window — unaggregated: each window
+    held ≤ threshold points before the batch, so rows are few anyway.
 
     The windows are applied twice on purpose: once as a LITERAL
     disjunction of ``zvalue BETWEEN`` predicates — over_rows is already
@@ -207,9 +202,10 @@ def _overflow_window_cells(pts: DataFrame, over_rows: list) -> DataFrame:
     (PushedFilters on the stored ``zvalue`` of the z-clustered layout),
     so at 100 TB the rebuild reads the few files/row groups each window
     overlaps instead of scanning the table into a join — and once as the
-    broadcast window-assign join that labels each surviving row. The
-    join alone gives no scan pruning: a join predicate is not a pushable
-    filter.
+    prefix equi-join of :func:`floor_lookup_batch` that labels each
+    surviving row (the windows are disjoint leaves of a prefix-free
+    cover, so a row's window is the one with ``wb == zvalue & mask(wpl)``):
+    O(rows × distinct pls), not a nested loop's O(rows × windows).
 
     The literal filter is a SUPERSET prefilter (the join still assigns
     exact windows), so it may be safely coarsened: overlapping/adjacent
@@ -220,14 +216,21 @@ def _overflow_window_cells(pts: DataFrame, over_rows: list) -> DataFrame:
     filter too wide to push anyway."""
     from functools import reduce
 
+    import pandas as pd
+
     spark = pts.sparkSession
-    bounds = [
-        (r.bucket_z, r.pl, r.bucket_z + (1 << (64 - r.pl)) - 1) for r in over_rows
-    ]
-    windows = spark.createDataFrame(bounds, "wb long, wpl int, wend long")
+    bounds = sorted(
+        (int(r.bucket_z), int(r.pl), int(r.bucket_z) + (1 << (64 - int(r.pl))) - 1)
+        for r in over_rows
+    )
+    # via pandas: Arrow, not a Python worker, feeds the broadcast
+    windows = spark.createDataFrame(
+        pd.DataFrame([b[:2] for b in bounds], columns=["wb", "wpl"]),
+        "wb long, wpl int",
+    )
 
     merged: list[list[int]] = []
-    for wb, _, wend in sorted((b[0], b[1], b[2]) for b in bounds):
+    for wb, _, wend in bounds:
         if merged and wb <= merged[-1][1] + 1:
             merged[-1][1] = max(merged[-1][1], wend)
         else:
@@ -248,18 +251,13 @@ def _overflow_window_cells(pts: DataFrame, over_rows: list) -> DataFrame:
             for lo, hi in merged
         ],
     )
-    zcol = with_zvalue(pts)
-    affected = zcol.filter(pred).join(
-        F.broadcast(windows),
-        (F.col("zvalue") >= F.col("wb")) & (F.col("zvalue") <= F.col("wend")),
+    pls = sorted({wpl for _, wpl, _ in bounds})
+    cand = (
+        with_zvalue(pts)
+        .filter(pred)
+        .withColumn("wpl", F.explode(F.array(*[F.lit(p) for p in pls])))
+        .withColumn("wb", F.col("zvalue").bitwiseAND(make_mask(F.col("wpl"))))
     )
-    return affected.groupBy("wb", "wpl", "zvalue").agg(F.count("*").alias("c"))
-
-
-def _atomic_write_index(spark: SparkSession, index: DataFrame, path: str) -> None:
-    """The new index is derived from the parquet it replaces — materialize
-    (executor-side, via localCheckpoint) before overwriting, or the
-    overwrite would truncate its own input mid-plan."""
-    index.select("bucket_z", "pl", "size").localCheckpoint().write.mode(
-        "overwrite"
-    ).parquet(f"{path}/index")
+    return cand.join(F.broadcast(windows), ["wb", "wpl"]).select(
+        "wb", "wpl", "zvalue"
+    )

@@ -6,9 +6,11 @@ a micro-batched stream: ``readStream`` over arriving files (or any
 source), z-encode each batch with the same native expressions the batch
 path uses, append to the z-clustered table via ``foreachBatch``, and
 refresh the bucket index per batch — amortizing what the reference paid
-per point. Index state is recomputed-by-aggregation each batch rather
-than held in the streaming state store: exact, restart-safe (state lives
-in the table, not the query), and identical to the batch semantics.
+per point. Index state lives in the table's index directory rather than
+in the streaming state store: each batch's refresh is exact (driver-side
+routing plus a rebuild of only the overflowing buckets), restart-safe
+(state lives in the table, not the query), and identical to the batch
+semantics.
 
 Also provides a watermarked windowed aggregation over the ``events``
 fixture — the streaming analog of ``range_count`` for time ranges — to
@@ -124,11 +126,15 @@ def stream_ingest_points(
     """Stream event files into the z-clustered points table.
 
     Each micro-batch is the reference's insert loop amortized: one
-    z-encode pass, one sorted append, one index refresh (incremental
-    after the first batch). ``availableNow`` drains the current backlog
-    and stops (used by tests/backfills); leave it False for a continuous
-    ingest. ``max_files_per_trigger`` bounds batch size (and makes
-    availableNow produce several micro-batches).
+    z-encode pass and one sorted append, then one index refresh. The
+    first batch builds the index from scratch; every later one calls
+    :func:`refresh_index_incremental`, which routes the batch's z-values
+    against the index on the driver, rewrites the index from the driver
+    frame, and re-reads the points table only for buckets that overflow
+    — a handful of Spark jobs per trigger. ``availableNow`` drains the
+    current backlog and stops (used by tests/backfills); leave it False
+    for a continuous ingest. ``max_files_per_trigger`` bounds batch size
+    (and makes availableNow produce several micro-batches).
 
     Replay semantics: at-least-once — a crash between the points append
     and the index refresh re-appends the batch's points on replay.
